@@ -47,12 +47,31 @@ class QueryCacheConfig:
     salt_buckets: int = 0
     #: Memoize finalized results per (fingerprint, watermark): a hot read
     #: (empty refresh window) whose watermark matches a result this session
-    #: already produced returns that DataFrame with ZERO Spark work — the
-    #: dashboard-reload case. Sound because the result as-of a watermark is
-    #: deterministic: state is immutable per watermark and finalize is a
-    #: pure function of state. Any watermark advance (new data) changes the
-    #: key, so the memo can never serve stale data the hot path itself
-    #: wouldn't serve.
+    #: already produced returns that DataFrame with ZERO Spark jobs, in
+    #: ``sql()`` and in ``collect()`` — the dashboard-reload case. Sound
+    #: because the result as-of a watermark is deterministic: state is
+    #: immutable per watermark and finalize is a pure function of state.
+    #:
+    #: * Shapes: every aggregate tier (nano, lite, template, fused and the
+    #:   classic assembly, static and dynamic), the outer shape of a derived
+    #:   table over a memoized aggregate (windows, filters, re-aggregation,
+    #:   ORDER BY/LIMIT; not dimension joins, which read the dims fresh),
+    #:   and filter top-k and row-set results.
+    #: * Keys: (fingerprint, state watermark, post-finalize shape); a
+    #:   dynamic bound adds the pinned now, a derived table its outer shape.
+    #:   Any watermark advance (new data) changes the key, so the memo can
+    #:   never serve stale data the hot path itself wouldn't serve.
+    #: * Size: only results of provably bounded size are collected and
+    #:   memoized — a LIMIT, or state at most the store's driver-collect
+    #:   cap — up to 100k rows; the memo holds at most 128 results and
+    #:   64 MB of Arrow data (least recently used dropped first). A larger
+    #:   result stays a lazy DataFrame over state and is not memoized.
+    #: * Values are driver-local LocalRelations, not plans over state
+    #:   files: a held result stays readable across later refreshes, even
+    #:   ones that remove the state files it was computed from.
+    #: * Invalidation: a watermark advance re-keys; ``audit()`` healing an
+    #:   entry (``audit_heal='invalidate'``) drops every memoized result of
+    #:   that fingerprint, derived-table shapes over it included.
     result_memo: bool = True
     #: Bounded-staleness refresh policy (ns). When ``now - watermark`` is
     #: below this, the query is served as-of the stored watermark — no

@@ -33,6 +33,7 @@ import datetime as _dt
 import decimal as _dec
 import os
 import time
+import weakref
 from collections import OrderedDict
 from typing import Dict, List, Optional
 
@@ -184,9 +185,18 @@ class CachedSparkSession(RefreshTiers):
         #: aggregate fingerprints already tagged for the durable
         #: bucket-coarsening donor index
         self._agg_registry: set = set()
-        #: (fingerprint, watermark_ns) → finalized result DataFrame. See
-        #: QueryCacheConfig.result_memo; bounded LRU.
-        self._result_memo: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+        #: (fingerprint, watermark key, post shape) → (finalized driver-
+        #: local result, its Arrow bytes). See QueryCacheConfig.result_memo;
+        #: LRU bounded by entry count and total bytes.
+        self._result_memo: "OrderedDict[tuple, tuple]" = OrderedDict()
+        self._result_memo_bytes = 0
+        #: LocalRelation results built from a finalized Arrow table → its
+        #: bytes. Only these may enter the result memo: a memoized result
+        #: must hold its rows, not a plan over state files a later refresh
+        #: may remove.
+        self._local_bytes: "weakref.WeakKeyDictionary[DataFrame, int]" = (
+            weakref.WeakKeyDictionary()
+        )
         #: fingerprints whose percentile histogram state exceeded
         #: config.percentile_max_distinct — permanently passthrough this
         #: session (the store bailed once; re-trying would redo the work
@@ -197,6 +207,14 @@ class CachedSparkSession(RefreshTiers):
         self._audit_info: Dict[str, dict] = {}
 
     _RESULT_MEMO_MAX = 128
+    #: total Arrow bytes of memoized results; least recently used beyond it
+    #: are dropped, and a larger single result is never memoized
+    _RESULT_MEMO_MAX_BYTES = 64 << 20
+    #: the classic, derived-table and filter planners collect a result
+    #: inside ``sql()`` (and memoize it) only when it provably has at most
+    #: this many rows: a LIMIT, or small state under a row-preserving or
+    #: row-reducing finalize
+    _RESULT_MEMO_MAX_ROWS = 100_000
 
     def _session_tz(self) -> str:
         """The session timezone, part of every fingerprint: bucket values
@@ -210,22 +228,81 @@ class CachedSparkSession(RefreshTiers):
         except Exception:
             return "?"
 
-    def _memo_result(
-        self, fingerprint: str, wm_ns: Optional[int], df: DataFrame, post=None
-    ):
-        """Memoize a finalized result. ``post`` is the POST-FINALIZE shape
-        (select order, ORDER BY, LIMIT) — the fingerprint deliberately
+    def _local_frame(self, tbl, schema=None) -> DataFrame:
+        """A finalized Arrow table re-entering Spark as a LocalRelation
+        (``collect()`` on it runs no Spark job), remembered as memo-able."""
+        df = arrow_to_spark(self.spark, tbl, schema=schema)
+        self._local_bytes[df] = tbl.nbytes
+        return df
+
+    def _materialize(self, df: DataFrame, fingerprint: str) -> DataFrame:
+        """Collect a result of provably bounded size inside ``sql()`` and
+        return it driver-local, so reading it runs no Spark job and it
+        survives a refresh that removes the state files it was read from.
+        Falls back to the lazy result if the Arrow round trip fails."""
+        try:
+            return self._local_frame(df.toArrow(), df.schema)
+        except Exception as e:  # noqa: BLE001 — an exotic type; stay lazy
+            self.config.log.info(fingerprint, f"result not materialized ({e})")
+            return df
+
+    @staticmethod
+    def _result_rows_bound(entry, limit: Optional[int]) -> Optional[int]:
+        """Provable row bound of a result finalized from ``entry``'s state:
+        its LIMIT, else the state's row count while the state is small (at
+        most the store's driver-collect cap); None when unbounded."""
+        if limit is not None:
+            return limit
+        rows = entry.state_rows()
+        cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+        return rows if rows is not None and rows <= cap else None
+
+    def _memo_get(self, key) -> Optional[DataFrame]:
+        if not self.config.result_memo:
+            return None
+        hit = self._result_memo.get(key)
+        if hit is None:
+            return None
+        self._result_memo.move_to_end(key)
+        return hit[0]
+
+    def _memo_result(self, key: tuple, df: DataFrame, decision: Decision) -> None:
+        """Memoize a finalized driver-local result under ``key`` =
+        ``(fingerprint, watermark key, post)``. The watermark key is the
+        state watermark, or ``("dyn", watermark, now)`` for a dynamic bound.
+        ``post`` is the POST-FINALIZE shape (select order, ORDER BY, LIMIT,
+        and a derived table's outer shape) — the fingerprint deliberately
         excludes it (those clauses sit above the cached state and share
         the entry), so it must key the memo separately: without it,
         ``… LIMIT 2`` hot-served its 2 rows to a later ``… LIMIT 4`` /
-        ``… ORDER BY 1 DESC`` of the same fingerprint (r12 find)."""
-        if not self.config.result_memo or wm_ns is None:
+        ``… ORDER BY 1 DESC`` of the same fingerprint (r12 find). Lazy
+        frames (not built by ``_local_frame``) are never memoized."""
+        nbytes = self._local_bytes.get(df)
+        if (
+            not self.config.result_memo
+            or key[1] is None
+            or nbytes is None
+            or nbytes > self._RESULT_MEMO_MAX_BYTES
+        ):
             return
         memo = self._result_memo
-        memo[(fingerprint, wm_ns, post)] = df
-        memo.move_to_end((fingerprint, wm_ns, post))
-        while len(memo) > self._RESULT_MEMO_MAX:
-            memo.popitem(last=False)
+        old = memo.pop(key, None)
+        if old is not None:
+            self._result_memo_bytes -= old[1]
+        memo[key] = (df, nbytes)
+        self._result_memo_bytes += nbytes
+        while (
+            len(memo) > self._RESULT_MEMO_MAX
+            or self._result_memo_bytes > self._RESULT_MEMO_MAX_BYTES
+        ):
+            self._result_memo_bytes -= memo.popitem(last=False)[1][1]
+        decision.memo_key = key
+
+    def _memo_drop(self, fingerprint: str) -> None:
+        """Forget every memoized result of ``fingerprint``, derived-table
+        outer shapes over it included (they share its key prefix)."""
+        for key in [k for k in self._result_memo if k[0] == fingerprint]:
+            self._result_memo_bytes -= self._result_memo.pop(key)[1]
 
     # -- public API ---------------------------------------------------------
 
@@ -540,8 +617,7 @@ class CachedSparkSession(RefreshTiers):
         if policy != "invalidate":
             return report
         healed = entry.invalidate()
-        for key in [k for k in self._result_memo if k[0] == fingerprint]:
-            self._result_memo.pop(key, None)
+        self._memo_drop(fingerprint)
         if healed:
             self.config.log.warn(
                 fingerprint,
@@ -789,18 +865,22 @@ class CachedSparkSession(RefreshTiers):
         "yy": "INTERVAL '1' YEAR",
     }
 
-    def _eval_bound_and_bucket(self, rhs_expr, now_ns: int, granularity: str):
-        """Bound value, its bucket truncation, their epoch-µs forms, and the
-        epoch-µs end of the boundary bucket — ONE driver-local job (the
-        dynamic warm path runs per refresh, so the tiny range(1) collects
-        are folded together). The epochs are computed JVM-side via
-        ``unix_micros`` in the SESSION timezone; the CLASSIC dyn assembly
-        binds them as its boundary-scan range (no Python-side timezone
+    def _eval_bound_and_bucket(
+        self, rhs_expr, now_ns: int, granularity: str, trunc_ns=None
+    ):
+        """Bound value, its bucket truncation, their epoch-µs forms, the
+        epoch-µs end of the boundary bucket and, given ``trunc_ns``, that
+        instant truncated to its bucket (the bucket-tail store's lower
+        bound) — ONE driver-local job (the dynamic warm path runs per
+        refresh, so the tiny range(1) collects are folded together). The
+        epochs are computed JVM-side via ``unix_micros`` in the SESSION
+        timezone; the CLASSIC dyn assembly binds them as its boundary-scan
+        range (no Python-side timezone
         assumption, no DST slack — the bucket end is ``date_trunc +
         INTERVAL``, calendar-exact in any tz). The fused SQL template
         never calls this: it renders the bound as a constant-folded
-        expression instead. Returns
-        ``(value, bucket, value_us, bucket_us, bucket_end_us | None)``."""
+        expression instead. Returns ``(value, bucket, value_us, bucket_us,
+        bucket_end_us | None, trunc_bucket | None)``."""
         col = to_column(self._pin_now(rhs_expr, now_ns))
         b = F.date_trunc(granularity, col)
         iv = self._BUCKET_INTERVAL.get(granularity.lower())
@@ -814,11 +894,18 @@ class CachedSparkSession(RefreshTiers):
             cols.append(
                 F.unix_micros((b + F.expr(iv)).cast("timestamp")).alias("be_us")
             )
+        if trunc_ns is not None:
+            cols.append(
+                F.date_trunc(
+                    granularity, F.timestamp_micros(F.lit(trunc_ns // 1000))
+                ).alias("t")
+            )
         row = self.spark.range(0, 1, 1, 1).select(*cols).collect()[0]
         if row["v"] is None:
             raise Unsupported("dynamic bound evaluated to NULL")
         be_us = row["be_us"] if iv is not None else None
-        return row["v"], row["b"], row["v_us"], row["b_us"], be_us
+        t = row["t"] if trunc_ns is not None else None
+        return row["v"], row["b"], row["v_us"], row["b_us"], be_us, t
 
     def _plan_filter(self, spec, query: str):
         """Simple filter (non-aggregate) query caching — the reference's
@@ -945,6 +1032,22 @@ class CachedSparkSession(RefreshTiers):
         )
 
         hit = entry.occupied
+        wm0 = entry.watermark_ns if hit else None
+        memo = (
+            self._memo_get((fingerprint, wm0, None))
+            if wm0 is not None and now_ns <= wm0
+            else None
+        )
+        if memo is not None:
+            # hot read of a result this session already materialized: the
+            # fingerprint carries the whole shape (ORDER BY, LIMIT), so the
+            # state watermark alone keys it
+            decision.cache_hit = True
+            decision.watermark_ns = wm0
+            decision.served_from_memo = True
+            decision.memo_key = (fingerprint, wm0, None)
+            cfg.log.info(fingerprint, "filter cache hit: result memo (no Spark work)")
+            return memo, decision
         # stale: the entry holds state that failed validation — every
         # recompute store below must REPLACE it, or append would return
         # stale-state ∪ recompute (duplicated rows)
@@ -1067,7 +1170,7 @@ class CachedSparkSession(RefreshTiers):
                 # watermark are untouched and the Spark-path fallback
                 # rescans [wm, swm) exactly once — store-back-last is the
                 # same contract _finish_dyn_driver documents.
-                out = arrow_to_spark(self.spark, res, schema=st_schema)
+                out = self._local_frame(res, st_schema)
                 if not entry.put_arrow(swm, res, st_schema):
                     return None
                 return out
@@ -1205,12 +1308,18 @@ class CachedSparkSession(RefreshTiers):
         if topk and decision.refresh_tier == "nano":
             # driver tier returned a LocalRelation already in final order
             # and limited — a re-sort would cost a per-refresh sort job
-            return stored, decision
-        out = stored if topk else stored.drop(part_col)
-        if spec.order_by:
-            out = out.orderBy(*sort_cols())
-        if spec.limit is not None:
-            out = out.limit(spec.limit)
+            out = stored
+        else:
+            out = stored if topk else stored.drop(part_col)
+            if spec.order_by:
+                out = out.orderBy(*sort_cols())
+            if spec.limit is not None:
+                out = out.limit(spec.limit)
+            rows = self._result_rows_bound(entry, spec.limit)
+            if rows is None or rows > self._RESULT_MEMO_MAX_ROWS:
+                return out, decision
+            out = self._materialize(out, fingerprint)
+        self._memo_result((fingerprint, entry.watermark_ns, None), out, decision)
         return out, decision
 
     def _find_filter_donor(self, spec, now_ns: int, own_fp: str):
@@ -1942,6 +2051,27 @@ class CachedSparkSession(RefreshTiers):
             df, decision = self._plan_subquery(spec.inner, query)
         else:
             df, decision = self._plan_cached(query, spec.inner)
+        # a memoized inner result is driver-local and bounded; an outer
+        # shape that reads nothing else (no dims, no rollups) is then a pure
+        # function of it, and no larger (the compiled vocabulary has no
+        # table-generating functions), so its result is memoized under the
+        # inner key extended by the outer shape — healing or invalidating
+        # the inner fingerprint drops it too
+        outer_key = None
+        if decision.memo_key is not None and not corr_joins and not spec.join_steps:
+            fp, wm_key, post = decision.memo_key
+            outer_key = (fp, wm_key, ("outer", post, self._outer_shape(spec)))
+            memo = self._memo_get(outer_key)
+            if memo is not None:
+                decision.served_from_memo = True
+                decision.memo_key = outer_key
+                self.config.log.info(
+                    fp, "derived table: result memo (no Spark work)"
+                )
+                return memo, decision
+        # the outer shape runs below: this result is not a memo serve
+        decision.served_from_memo = False
+        decision.memo_key = None
         for j, key_pairs in corr_joins or ():
             # O(groups) build side by construction — explicit broadcast;
             # NULL outer keys never match (correlated equality semantics)
@@ -2051,7 +2181,7 @@ class CachedSparkSession(RefreshTiers):
                 )
                 if spec.limit is not None:
                     df = df.limit(spec.limit)
-                return df, decision
+                return self._memo_outer(df, decision, outer_key)
             df = df.select(
                 *[to_column(i.expr).alias(i.name) for i in spec.items]
             )
@@ -2095,6 +2225,26 @@ class CachedSparkSession(RefreshTiers):
             df = df.orderBy(*cols)
         if spec.limit is not None:
             df = df.limit(spec.limit)
+        return self._memo_outer(df, decision, outer_key)
+
+    @staticmethod
+    def _outer_shape(spec) -> str:
+        """Memo key part for a derived table's outer shape: everything
+        above the inner aggregate (``repr`` tells ``1`` from ``1.0``)."""
+        return repr(
+            (
+                spec.items, spec.predicate, spec.group_by, spec.aggregates,
+                spec.having, spec.select_order, spec.qualify, spec.order_by,
+                spec.limit,
+            )
+        )
+
+    def _memo_outer(self, df: DataFrame, decision: Decision, outer_key):
+        """Materialize and memoize a derived table's outer result when
+        ``_plan_subquery`` found its shape memo-able."""
+        if outer_key is not None:
+            df = self._materialize(df, outer_key[0])
+            self._memo_result(outer_key, df, decision)
         return df, decision
 
     #: aggregate functions whose finalized value IS a mergeable state
@@ -4020,6 +4170,40 @@ class CachedSparkSession(RefreshTiers):
         state_is_local = False
         cached_state = None
 
+        def memo_wm(wm_ns):
+            # a dynamic result depends on the pinned now and on the bound
+            # itself: every `ts > now() - Δ` shares one bound-independent
+            # entry, and a repeat at the same now has the same boundary
+            # while an earlier now would pick a different lower and must
+            # NOT serve the memo — the key carries (state watermark, now,
+            # bound), which determines the lower bound exactly
+            if dyn_bound is None:
+                return wm_ns
+            return ("dyn", wm_ns, now_ns, dyn_bound.op, dyn_bound.rhs.canon())
+
+        wm0 = entry.watermark_ns if hit else None
+        # hot read: the refresh window [wm, now) is provably empty — or
+        # waived by the bounded-staleness policy
+        # (config.min_refresh_interval_ns), which is not applied to
+        # dynamic-bound queries: their finalize recomputes the boundary
+        # bucket from raw rows as-of now, which would mix freshness horizons
+        hot = wm0 is not None and (
+            now_ns <= wm0
+            or (dyn_bound is None and now_ns - wm0 < cfg.min_refresh_interval_ns)
+        )
+        hot_key = (fingerprint, memo_wm(wm0), post_key)
+        memo = self._memo_get(hot_key) if hot else None
+        if memo is not None:
+            # this session already finalized a driver-local result at this
+            # exact state: same state, same pure finalize → same rows. Checked
+            # before any state read — the memoized rows need no state files.
+            decision.cache_hit = True
+            decision.watermark_ns = wm0
+            decision.served_from_memo = True
+            decision.memo_key = hot_key
+            cfg.log.info(fingerprint, "cache hit: result memo (no Spark work)")
+            return memo, decision
+
         def data_scan_wm(lo_ns: Optional[int]):
             """``watermark_mode='data'``: collect max event time over
             ``[lo, now)`` FIRST, then bound the state scan by
@@ -4089,21 +4273,11 @@ class CachedSparkSession(RefreshTiers):
                 hit = False
 
         store_wm_ns = now_ns  # overridden per-branch by data_scan_wm
-        wm0 = entry.watermark_ns if hit else None
-        if hit and wm0 is not None and (
-            now_ns <= wm0
-            # bounded-staleness policy: within the refresh interval, serve
-            # as-of the stored watermark (config.min_refresh_interval_ns).
-            # Not applied to dynamic-bound queries: their finalize
-            # recomputes the boundary bucket from raw rows as-of now, which
-            # would mix freshness horizons.
-            or (dyn_bound is None and now_ns - wm0 < cfg.min_refresh_interval_ns)
-        ):
-            # hot read: the refresh window [wm, now) is provably empty (or
-            # waived by the staleness policy), so the stored state already
-            # answers — no scan, no store-back, one tiny local job.
-            # (Queries re-run faster than data arrives — the reference's
-            # repeated-dashboard case — pay only the state read.)
+        if hit and hot:
+            # hot read: the stored state already answers — no scan, no
+            # store-back. (Queries re-run faster than data arrives — the
+            # reference's repeated-dashboard case — pay only the state
+            # read, then nothing while the memo holds the result.)
             # A now BELOW the watermark (only possible via the
             # override_now_ns replay knob; wall clocks are monotone) lands
             # here too and serves as-of the WATERMARK, not the regressed
@@ -4112,32 +4286,6 @@ class CachedSparkSession(RefreshTiers):
             # as-of store time (no upper bound at all, SURVEY §4.4.2).
             decision.cache_hit = True
             decision.watermark_ns = entry.watermark_ns
-            if cfg.result_memo:
-                if dyn_bound is not None:
-                    # dynamic results depend on the pinned now too (a repeat
-                    # at the same now has the same boundary; an earlier now
-                    # would pick a different lower and must NOT serve the
-                    # memo) — the memo key carries (state watermark, now),
-                    # which determines the bound exactly
-                    memo = self._result_memo.get(
-                        (
-                            fingerprint,
-                            ("dyn", entry.watermark_ns, now_ns),
-                            post_key,
-                        )
-                    )
-                else:
-                    memo = self._result_memo.get(
-                        (fingerprint, entry.watermark_ns, post_key)
-                    )
-                if memo is not None:
-                    # this session already finalized a result at this exact
-                    # watermark: same state, same pure finalize → same rows.
-                    decision.served_from_memo = True
-                    cfg.log.info(
-                        fingerprint, "cache hit: result memo (no Spark work)"
-                    )
-                    return memo, decision
             cfg.log.info(fingerprint, "cache hit: fresh window empty, serving state")
             merged = None
             if cached_state is None:
@@ -4177,7 +4325,6 @@ class CachedSparkSession(RefreshTiers):
                 pc_col = cfg.temporal_partition_columns.get(ts_col)
                 pc_arg = pc_col if (pc_col and pc_col in base_cols) else None
                 res = None
-                memo_key = now_ns
                 if dyn_bound is None:
                     # static ladder: nano (driver pyarrow scan, bytes-
                     # gated) → lite (one plain-sized job + driver merge)
@@ -4260,10 +4407,6 @@ class CachedSparkSession(RefreshTiers):
                                 tpl, entry, cached_state, wm_ns, now_ns,
                                 dyn_bound.rhs, decision, spec, state_cols,
                             )
-                    if res is not None:
-                        # the bound is a pure function of the pinned now,
-                        # so (state watermark, now) keys the memo exactly
-                        memo_key = ("dyn", now_ns, now_ns)
                 if res is not None:
                     decision.cache_hit = True
                     decision.watermark_ns = wm_ns
@@ -4272,7 +4415,9 @@ class CachedSparkSession(RefreshTiers):
                         f"cache hit: incremental refresh from watermark {wm_ns}",
                     )
                     # entry watermark is now now_ns: memo for hot re-reads
-                    self._memo_result(fingerprint, memo_key, res, post_key)
+                    self._memo_result(
+                        (fingerprint, memo_wm(now_ns), post_key), res, decision
+                    )
                     return res, decision
             scan_hi, store_wm_ns = data_scan_wm(wm_ns)
             merged, obs = self._warm_merge(
@@ -4361,6 +4506,14 @@ class CachedSparkSession(RefreshTiers):
         # hard-part 3), set by data_scan_wm ABOVE the state scan so the scan
         # is bounded by the stored watermark (hot reads store nothing).
 
+        # memo key of this call's result: a warm refresh or miss stores
+        # state at store_wm_ns; a hot read serves the existing watermark
+        res_key = (
+            hot_key
+            if merged is None
+            else (fingerprint, memo_wm(store_wm_ns), post_key)
+        )
+
         # Fused fast path (simple shapes): ONE job computes state AND final
         # columns together; the state is stored from the collected Arrow
         # table (no second scan) and the result is finished driver-side —
@@ -4378,14 +4531,7 @@ class CachedSparkSession(RefreshTiers):
                 decision,
             )
             if fused is not None:
-                # warm refresh advanced the watermark to store_wm_ns; a hot
-                # read served state as-of the existing watermark
-                self._memo_result(
-                    fingerprint,
-                    store_wm_ns if merged is not None else decision.watermark_ns,
-                    fused,
-                    post_key,
-                )
+                self._memo_result(res_key, fused, decision)
                 return fused, decision
 
         # store-back (reference always wraps in CacheUpdateAggregateExec so
@@ -4415,19 +4561,27 @@ class CachedSparkSession(RefreshTiers):
                 if rows0 is not None and rows0 > cap0:
                     # truncate the OLD watermark to the bucket JVM-side
                     # (session-timezone calendar semantics, matching how
-                    # the state buckets themselves were computed)
-                    lo_val = (
-                        self.spark.range(0, 1, 1, 1)
-                        .select(
-                            F.date_trunc(
-                                bucket_gran,
-                                F.timestamp_micros(
-                                    F.lit(decision.watermark_ns // 1000)
-                                ),
-                            ).alias("b")
+                    # the state buckets themselves were computed); a
+                    # dynamic bound evaluates in the same one-row job
+                    if dyn_bound is not None:
+                        dyn_eval = self._eval_bound_and_bucket(
+                            dyn_bound.rhs, now_ns, bucket_gran,
+                            trunc_ns=decision.watermark_ns,
                         )
-                        .collect()[0]["b"]
-                    )
+                        lo_val = dyn_eval[5]
+                    else:
+                        lo_val = (
+                            self.spark.range(0, 1, 1, 1)
+                            .select(
+                                F.date_trunc(
+                                    bucket_gran,
+                                    F.timestamp_micros(
+                                        F.lit(decision.watermark_ns // 1000)
+                                    ),
+                                ).alias("b")
+                            )
+                            .collect()[0]["b"]
+                        )
                     stored = entry.put_bucket_tail(
                         store_wm_ns, merged, lo_val, self.spark
                     )
@@ -4634,6 +4788,13 @@ class CachedSparkSession(RefreshTiers):
             out = stored.select(*final_select)
 
         out = self._apply_order_limit(out, spec)
+        # finalize adds no rows beyond one per state row and grouping set
+        rows = self._result_rows_bound(entry, spec.limit)
+        if rows is not None and spec.limit is None and spec.grouping_sets:
+            rows *= len(spec.grouping_sets)
+        if rows is not None and rows <= self._RESULT_MEMO_MAX_ROWS:
+            out = self._materialize(out, fingerprint)
+            self._memo_result(res_key, out, decision)
         return out, decision
 
     def _finalize_fused(
@@ -4777,12 +4938,12 @@ class CachedSparkSession(RefreshTiers):
             if extra_names:
                 res = res.select(list(range(n_fin)))
                 res_fields = res_fields[:n_fin]
-            out = arrow_to_spark(self.spark, res, schema=StructType(res_fields))
             if spec.limit is not None and not spec.order_by:
-                out = out.limit(spec.limit)
-            return out
+                res = res.slice(0, spec.limit)
+            return self._local_frame(res, StructType(res_fields))
         # mixed null placements / NaN present: Spark-side local sort (single
         # partition → no range exchange), then project the extras away.
+        # The rows are still driver-local, so the result stays memo-able.
         out = arrow_to_spark(self.spark, res, schema=StructType(res_fields))
         sort_cols = [
             _order_col(nm, o) for o, nm in zip(spec.order_by, order_names)
@@ -4790,7 +4951,9 @@ class CachedSparkSession(RefreshTiers):
         out = out.coalesce(1).sortWithinPartitions(*sort_cols)
         if spec.limit is not None:
             out = out.limit(spec.limit)
-        return out.select(*out_names)
+        out = out.select(*out_names)
+        self._local_bytes[out] = res.nbytes
+        return out
 
     def _warm_merge(
         self,

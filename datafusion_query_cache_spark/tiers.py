@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame, Observation
@@ -140,6 +140,10 @@ class Decision:
     #: True when a hot read was answered from the session's result memo
     #: (zero Spark work — not even a local finalize job)
     served_from_memo: bool = False
+    #: ``(fingerprint, watermark key, post-finalize shape)`` under which the
+    #: returned result sits in the session's result memo; None when it is
+    #: not memoized. A derived-table outer shape extends this key.
+    memo_key: Optional[tuple] = field(default=None, repr=False)
 
     def fresh_rows(self) -> Optional[int]:
         """Rows scanned by the incremental refresh (the reference's

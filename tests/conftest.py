@@ -82,3 +82,23 @@ def rows_set(df):
                 vals.append(v)
         out.append(tuple(vals))
     return sorted(out, key=repr)
+
+
+def group_job_stats(spark, tag, fn):
+    """Run ``fn()`` under Spark job group ``tag``; return its result and the
+    sorted ids of the Spark jobs it ran. The caller's own job group,
+    description and interrupt flag are restored afterwards."""
+    sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    saved = [sc.getLocalProperty(k) for k in props]
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        for k, v in zip(props, saved):
+            sc.setLocalProperty(k, v)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(tag))

@@ -18,6 +18,7 @@ from datafusion_query_cache_spark.operators.spread import (
     exec_session,
     on_session,
 )
+from tests.conftest import group_job_stats
 
 
 def test_exec_session_isolated_and_cached(spark):
@@ -90,17 +91,6 @@ def test_concurrent_ingest_keeps_parent_aqe(spark, tmp_path):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def _group_job_stats(spark, tag, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    return out, sorted(st.getJobIdsForGroup(tag))
-
-
 def test_refresh_to_arrow_small_plan_one_nonadaptive_job(qc, spark):
     """A refresh collect whose PLAN is provably small must run as ONE
     Spark job (AQE-off clone), not one stage-job per exchange — and
@@ -112,7 +102,7 @@ def test_refresh_to_arrow_small_plan_one_nonadaptive_job(qc, spark):
         .limit(1001)
     )
     expect = sorted(map(tuple, df.collect()))
-    tbl, jobs = _group_job_stats(
+    tbl, jobs = group_job_stats(
         spark, "rta-small", lambda: qc._refresh_to_arrow(df, narrowed=False)
     )
     assert sorted(tuple(r.values()) for r in tbl.to_pylist()) == expect
