@@ -55,17 +55,21 @@ class QueryCacheConfig:
     #: * Shapes: every aggregate tier (nano, lite, template, fused and the
     #:   classic assembly, static and dynamic), the outer shape of a derived
     #:   table over a memoized aggregate (windows, filters, re-aggregation,
-    #:   ORDER BY/LIMIT; not dimension joins, which read the dims fresh),
-    #:   and filter top-k and row-set results.
+    #:   ORDER BY/LIMIT), and filter top-k and row-set results. A result
+    #:   that also reads other tables or combines several results (dimension
+    #:   joins, correlated rollups, UNION branches, FULL OUTER halves) is
+    #:   not memoized, and its cached parts stay lazy.
     #: * Keys: (fingerprint, state watermark, post-finalize shape); a
     #:   dynamic bound adds the pinned now, a derived table its outer shape.
     #:   Any watermark advance (new data) changes the key, so the memo can
     #:   never serve stale data the hot path itself wouldn't serve.
     #: * Size: only results of provably bounded size are collected and
     #:   memoized — a LIMIT, or state at most the store's driver-collect
-    #:   cap — up to 100k rows; the memo holds at most 128 results and
+    #:   cap — up to 10k rows; the memo holds at most 128 results and
     #:   64 MB of Arrow data (least recently used dropped first). A larger
     #:   result stays a lazy DataFrame over state and is not memoized.
+    #:   Each refresh of a bounded result collects it inside ``sql()``,
+    #:   whether or not it is read again.
     #: * Values are driver-local LocalRelations, not plans over state
     #:   files: a held result stays readable across later refreshes, even
     #:   ones that remove the state files it was computed from.

@@ -213,8 +213,11 @@ class CachedSparkSession(RefreshTiers):
     #: the classic, derived-table and filter planners collect a result
     #: inside ``sql()`` (and memoize it) only when it provably has at most
     #: this many rows: a LIMIT, or small state under a row-preserving or
-    #: row-reducing finalize
-    _RESULT_MEMO_MAX_ROWS = 100_000
+    #: row-reducing finalize. Every refresh of such a result pays the
+    #: collect and the copy back; on a 4-core host that added 30-110 ms
+    #: (3-6 % of a refresh plus read) up to 10k rows, and 200-300 ms
+    #: (11-14 %) at 50k-80k rows.
+    _RESULT_MEMO_MAX_ROWS = 10_000
 
     def _session_tz(self) -> str:
         """The session timezone, part of every fingerprint: bucket values
@@ -239,23 +242,41 @@ class CachedSparkSession(RefreshTiers):
         """Collect a result of provably bounded size inside ``sql()`` and
         return it driver-local, so reading it runs no Spark job and it
         survives a refresh that removes the state files it was read from.
-        Falls back to the lazy result if the Arrow round trip fails."""
+        A schema Arrow cannot carry stays lazy; an error running the query
+        propagates, as it would from ``collect()``."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         try:
-            return self._local_frame(df.toArrow(), df.schema)
-        except Exception as e:  # noqa: BLE001 — an exotic type; stay lazy
+            to_arrow_schema(df.schema, error_on_duplicated_field_names_in_struct=True)
+        except Exception as e:  # noqa: BLE001 — e.g. an interval column
             self.config.log.info(fingerprint, f"result not materialized ({e})")
+            return df
+        tbl = df.toArrow()
+        try:
+            return self._local_frame(tbl, df.schema)
+        except Exception as e:  # noqa: BLE001 — Arrow → Spark conversion
+            if self._strict_errors():
+                raise
+            self.config.log.warn(fingerprint, f"result not materialized ({e})")
             return df
 
     @staticmethod
-    def _result_rows_bound(entry, limit: Optional[int]) -> Optional[int]:
+    def _state_is_small(entry) -> Optional[bool]:
+        """Whether ``entry``'s state is at most the store's driver-collect
+        cap; None when its row count is unknown."""
+        rows = entry.state_rows()
+        if rows is None:
+            return None
+        return rows <= getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
+
+    @classmethod
+    def _result_rows_bound(cls, entry, limit: Optional[int]) -> Optional[int]:
         """Provable row bound of a result finalized from ``entry``'s state:
-        its LIMIT, else the state's row count while the state is small (at
-        most the store's driver-collect cap); None when unbounded."""
+        its LIMIT, else the state's row count while the state is small;
+        None when unbounded."""
         if limit is not None:
             return limit
-        rows = entry.state_rows()
-        cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-        return rows if rows is not None and rows <= cap else None
+        return entry.state_rows() if cls._state_is_small(entry) else None
 
     def _memo_get(self, key) -> Optional[DataFrame]:
         if not self.config.result_memo:
@@ -879,21 +900,26 @@ class CachedSparkSession(RefreshTiers):
         assumption, no DST slack — the bucket end is ``date_trunc +
         INTERVAL``, calendar-exact in any tz). The fused SQL template
         never calls this: it renders the bound as a constant-folded
-        expression instead. Returns ``(value, bucket, value_us, bucket_us,
+        expression instead. ``rhs_expr`` None evaluates the truncation
+        alone. Returns ``(value, bucket, value_us, bucket_us,
         bucket_end_us | None, trunc_bucket | None)``."""
-        col = to_column(self._pin_now(rhs_expr, now_ns))
-        b = F.date_trunc(granularity, col)
         iv = self._BUCKET_INTERVAL.get(granularity.lower())
-        cols = [
-            col.alias("v"),
-            b.alias("b"),
-            F.unix_micros(col.cast("timestamp")).alias("v_us"),
-            F.unix_micros(b.cast("timestamp")).alias("b_us"),
-        ]
-        if iv is not None:
-            cols.append(
-                F.unix_micros((b + F.expr(iv)).cast("timestamp")).alias("be_us")
-            )
+        cols = []
+        if rhs_expr is not None:
+            col = to_column(self._pin_now(rhs_expr, now_ns))
+            b = F.date_trunc(granularity, col)
+            cols += [
+                col.alias("v"),
+                b.alias("b"),
+                F.unix_micros(col.cast("timestamp")).alias("v_us"),
+                F.unix_micros(b.cast("timestamp")).alias("b_us"),
+            ]
+            if iv is not None:
+                cols.append(
+                    F.unix_micros((b + F.expr(iv)).cast("timestamp")).alias(
+                        "be_us"
+                    )
+                )
         if trunc_ns is not None:
             cols.append(
                 F.date_trunc(
@@ -901,13 +927,15 @@ class CachedSparkSession(RefreshTiers):
                 ).alias("t")
             )
         row = self.spark.range(0, 1, 1, 1).select(*cols).collect()[0]
+        t = row["t"] if trunc_ns is not None else None
+        if rhs_expr is None:
+            return None, None, None, None, None, t
         if row["v"] is None:
             raise Unsupported("dynamic bound evaluated to NULL")
         be_us = row["be_us"] if iv is not None else None
-        t = row["t"] if trunc_ns is not None else None
         return row["v"], row["b"], row["v_us"], row["b_us"], be_us, t
 
-    def _plan_filter(self, spec, query: str):
+    def _plan_filter(self, spec, query: str, materialize: bool = True):
         """Simple filter (non-aggregate) query caching — the reference's
         second unchecked roadmap box (``README.md:130``).
 
@@ -917,6 +945,10 @@ class CachedSparkSession(RefreshTiers):
         LIMIT the state is instead the maintained top-k (top-k of
         ``topk(old) ∪ fresh`` ≡ top-k of the whole history), so the stored
         state stays k rows no matter how much data flows through.
+
+        ``materialize=False`` (a result feeding a larger plan, such as a
+        UNION branch) keeps a bounded result lazy instead of collecting it
+        inside ``sql()``: only a query's own result is memoized.
         """
         cfg = self.config
 
@@ -1316,7 +1348,7 @@ class CachedSparkSession(RefreshTiers):
             if spec.limit is not None:
                 out = out.limit(spec.limit)
             rows = self._result_rows_bound(entry, spec.limit)
-            if rows is None or rows > self._RESULT_MEMO_MAX_ROWS:
+            if not materialize or rows is None or rows > self._RESULT_MEMO_MAX_ROWS:
                 return out, decision
             out = self._materialize(out, fingerprint)
         self._memo_result((fingerprint, entry.watermark_ns, None), out, decision)
@@ -1399,15 +1431,15 @@ class CachedSparkSession(RefreshTiers):
         decisions = []
         for b in spec.branches:
             if isinstance(b, FilterSpec):
-                df, d = self._plan_filter(b, query)
+                df, d = self._plan_filter(b, query, materialize=False)
             elif isinstance(b, SubquerySpec):
-                df, d = self._plan_subquery(b, query)
+                df, d = self._plan_subquery(b, query, materialize=False)
             elif isinstance(b, _US):
                 # nested set operation (r13): left-nested chains / mixed
                 # trees — recurse; every leaf still owns its cache entry
                 df, d = self._plan_union(b, query)
             else:
-                df, d = self._plan_cached(query, b)
+                df, d = self._plan_cached(query, b, materialize=False)
             dfs.append(df)
             decisions.append(d)
         names = dfs[0].columns
@@ -1515,7 +1547,7 @@ class CachedSparkSession(RefreshTiers):
         for sq in subqs:
             if sq in resolved:
                 continue
-            idf, idec = self._plan_cached(query, sq.spec)
+            idf, idec = self._plan_cached(query, sq.spec, materialize=False)
             if isinstance(sq, _CSQ):
                 # correlated scalar → broadcast LEFT JOIN against the
                 # cached grouped rollup: the per-key scalar becomes the
@@ -1819,7 +1851,9 @@ class CachedSparkSession(RefreshTiers):
                             "is not a group key"
                         )
                     gnames.append(g.name)
-                idf, idec = self._plan_cached(query, sq.spec)
+                idf, idec = self._plan_cached(
+                    query, sq.spec, materialize=False
+                )
                 i = len(corr_joins)
                 cv = f"__qc_cv{i}"
                 val_name = sq.spec.select_order[-1]
@@ -1844,7 +1878,7 @@ class CachedSparkSession(RefreshTiers):
                 resolved[sq] = val
                 hits.append(idec.cache_hit)
                 continue
-            idf, idec = self._plan_cached(query, sq.spec)
+            idf, idec = self._plan_cached(query, sq.spec, materialize=False)
             rows = idf.collect()
             val = rows[0][0] if rows else None
             if val is not None and not isinstance(
@@ -1965,7 +1999,9 @@ class CachedSparkSession(RefreshTiers):
             cache_hit=dec.cache_hit and all(hits),
         )
 
-    def _plan_subquery(self, spec, query: str, corr_joins=None):
+    def _plan_subquery(
+        self, spec, query: str, corr_joins=None, materialize: bool = True
+    ):
         """Aggregate inside a derived table: cache the INNER aggregate,
         replay the outer shape post-finalize.
 
@@ -1974,7 +2010,7 @@ class CachedSparkSession(RefreshTiers):
         key_alias)`` triples broadcast-LEFT-JOINed onto the finalized
         inner before the outer projection; the projection then computes
         the item expressions from the joined ``__qc_cv{i}`` columns and
-        drops the helpers.
+        drops the helpers. ``materialize`` as in ``_plan_filter``.
 
         The reference's bottom-up rule rewrites Aggregate nodes wherever
         they sit in the plan (``src/aggregate.rs:74-76``, ``README.md:124``);
@@ -2044,21 +2080,28 @@ class CachedSparkSession(RefreshTiers):
 
         from .plans.ir import SubquerySpec as _SubquerySpec
 
-        if isinstance(spec.inner, _SubquerySpec):
-            # nested derived tables / chained CTEs: recurse — only the
-            # INNERMOST aggregate is cached; every level above replays as
-            # plain ops over its finalized O(state) result
-            df, decision = self._plan_subquery(spec.inner, query)
-        else:
-            df, decision = self._plan_cached(query, spec.inner)
         # a memoized inner result is driver-local and bounded; an outer
         # shape that reads nothing else (no dims, no rollups) is then a pure
         # function of it, and no larger (the compiled vocabulary has no
         # table-generating functions), so its result is memoized under the
         # inner key extended by the outer shape — healing or invalidating
-        # the inner fingerprint drops it too
+        # the inner fingerprint drops it too. Otherwise the inner stays
+        # lazy: collecting it would only add a driver round trip before
+        # the join.
+        memo_ok = materialize and not corr_joins and not spec.join_steps
+        if isinstance(spec.inner, _SubquerySpec):
+            # nested derived tables / chained CTEs: recurse — only the
+            # INNERMOST aggregate is cached; every level above replays as
+            # plain ops over its finalized O(state) result
+            df, decision = self._plan_subquery(
+                spec.inner, query, materialize=memo_ok
+            )
+        else:
+            df, decision = self._plan_cached(
+                query, spec.inner, materialize=memo_ok
+            )
         outer_key = None
-        if decision.memo_key is not None and not corr_joins and not spec.join_steps:
+        if decision.memo_key is not None and memo_ok:
             fp, wm_key, post = decision.memo_key
             outer_key = (fp, wm_key, ("outer", post, self._outer_shape(spec)))
             memo = self._memo_get(outer_key)
@@ -2307,7 +2350,7 @@ class CachedSparkSession(RefreshTiers):
         for sq in subqs:
             if sq in resolved:
                 continue
-            idf, idec = self._plan_cached(query, sq.spec)
+            idf, idec = self._plan_cached(query, sq.spec, materialize=False)
             # fold semantics mirror _plan_scalar_outer's top-level folds
             # exactly (IN three-valued NULL handling, quantified ANY/ALL
             # OR-chains, EXISTS row probe) — the difference is only WHERE
@@ -3053,9 +3096,11 @@ class CachedSparkSession(RefreshTiers):
             + (JoinStep(dim, cond, "inner", using=using),),
         )
 
-        dfA, decA = self._plan_cached(f"{query} /*qc:full-left*/", left_spec)
+        dfA, decA = self._plan_cached(
+            f"{query} /*qc:full-left*/", left_spec, materialize=False
+        )
         dfM, decM = self._plan_cached(
-            f"{query} /*qc:full-matched*/", matched_spec
+            f"{query} /*qc:full-matched*/", matched_spec, materialize=False
         )
 
         # anti side: dim rows never matched (null-safe on EVERY dim column
@@ -3668,7 +3713,10 @@ class CachedSparkSession(RefreshTiers):
         except Exception:
             return None
 
-    def _plan_cached(self, query: str, spec: Optional[AggSpec] = None):
+    def _plan_cached(
+        self, query: str, spec: Optional[AggSpec] = None, materialize: bool = True
+    ):
+        """Aggregate query caching. ``materialize`` as in ``_plan_filter``."""
         cfg = self.config
         if spec is None:
             spec = parse_agg_query(query)
@@ -4301,10 +4349,8 @@ class CachedSparkSession(RefreshTiers):
                 sdf = entry.state_df(self.spark)
                 if sdf is not None:
                     cached_state = sdf
-                    rows = entry.state_rows()
-                    cap = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
                     # template gate: same small-state contract get_arrow had
-                    state_is_local = rows is not None and rows <= cap
+                    state_is_local = self._state_is_small(entry) is True
                 else:
                     _local_state()
             if (
@@ -4556,32 +4602,18 @@ class CachedSparkSession(RefreshTiers):
             # (small state, layer cap reached → compaction) return None
             # and the full put below runs.
             try:
-                rows0 = entry.state_rows()
-                cap0 = getattr(entry, "DRIVER_COLLECT_MAX_ROWS", 500_000)
-                if rows0 is not None and rows0 > cap0:
+                if self._state_is_small(entry) is False:
                     # truncate the OLD watermark to the bucket JVM-side
                     # (session-timezone calendar semantics, matching how
                     # the state buckets themselves were computed); a
                     # dynamic bound evaluates in the same one-row job
+                    ev = self._eval_bound_and_bucket(
+                        dyn_bound.rhs if dyn_bound is not None else None,
+                        now_ns, bucket_gran, trunc_ns=decision.watermark_ns,
+                    )
                     if dyn_bound is not None:
-                        dyn_eval = self._eval_bound_and_bucket(
-                            dyn_bound.rhs, now_ns, bucket_gran,
-                            trunc_ns=decision.watermark_ns,
-                        )
-                        lo_val = dyn_eval[5]
-                    else:
-                        lo_val = (
-                            self.spark.range(0, 1, 1, 1)
-                            .select(
-                                F.date_trunc(
-                                    bucket_gran,
-                                    F.timestamp_micros(
-                                        F.lit(decision.watermark_ns // 1000)
-                                    ),
-                                ).alias("b")
-                            )
-                            .collect()[0]["b"]
-                        )
+                        dyn_eval = ev
+                    lo_val = ev[5]
                     stored = entry.put_bucket_tail(
                         store_wm_ns, merged, lo_val, self.spark
                     )
@@ -4792,7 +4824,7 @@ class CachedSparkSession(RefreshTiers):
         rows = self._result_rows_bound(entry, spec.limit)
         if rows is not None and spec.limit is None and spec.grouping_sets:
             rows *= len(spec.grouping_sets)
-        if rows is not None and rows <= self._RESULT_MEMO_MAX_ROWS:
+        if materialize and rows is not None and rows <= self._RESULT_MEMO_MAX_ROWS:
             out = self._materialize(out, fingerprint)
             self._memo_result(res_key, out, decision)
         return out, decision
@@ -4942,8 +4974,9 @@ class CachedSparkSession(RefreshTiers):
                 res = res.slice(0, spec.limit)
             return self._local_frame(res, StructType(res_fields))
         # mixed null placements / NaN present: Spark-side local sort (single
-        # partition → no range exchange), then project the extras away.
-        # The rows are still driver-local, so the result stays memo-able.
+        # partition → no range exchange), collected here so the result is
+        # a plain LocalRelation like the branch above (memo-able, and no
+        # sort job on the caller's read)
         out = arrow_to_spark(self.spark, res, schema=StructType(res_fields))
         sort_cols = [
             _order_col(nm, o) for o, nm in zip(spec.order_by, order_names)
@@ -4952,8 +4985,7 @@ class CachedSparkSession(RefreshTiers):
         if spec.limit is not None:
             out = out.limit(spec.limit)
         out = out.select(*out_names)
-        self._local_bytes[out] = res.nbytes
-        return out
+        return self._local_frame(out.toArrow(), out.schema)
 
     def _warm_merge(
         self,

@@ -412,3 +412,89 @@ def test_memo_dynamic_bound_keys_the_delta(spark, qc):
         assert qc.sql(q).collect() == w
     for q, w in zip(sqls, want):
         assert _hot_reads(spark, qc, q, n=1) == w
+
+
+@pytest.fixture
+def rm_seg(spark):
+    spark.sql(
+        "SELECT DISTINCT user_id AS uid, concat('s', user_id % 4) AS segment "
+        "FROM events"
+    ).createOrReplaceTempView("rm_seg")
+    yield
+    spark.catalog.dropTempView("rm_seg")
+
+
+#: dynamic bounds keep the cached parts off the fused tier (which always
+#: finishes driver-side) on misses and hot reads
+COMPOSITE_SQLS = {
+    "dims": (
+        "SELECT segment, k, n FROM (SELECT user_id AS k, count(*) AS n "
+        "FROM events WHERE ts > now() - INTERVAL 20 DAY GROUP BY 1) x "
+        "JOIN rm_seg ON k = uid"
+    ),
+    "union": (
+        "SELECT event_type, count(*) AS n FROM events WHERE value > 50 "
+        "AND ts > now() - INTERVAL 20 DAY GROUP BY 1 UNION ALL "
+        "SELECT event_type, count(*) AS n FROM events WHERE value <= 50 "
+        "AND ts > now() - INTERVAL 20 DAY GROUP BY 1"
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(COMPOSITE_SQLS))
+def test_composite_result_keeps_parts_lazy(spark, qc, monkeypatch, rm_seg, shape):
+    """A result that reads more than its cached parts (a derived table
+    joined to dims, a UNION) is never memoized, so its bounded parts are
+    not collected inside sql() either: that would only add a driver round
+    trip before the join or union runs."""
+    sql = COMPOSITE_SQLS[shape]
+    calls = []
+    monkeypatch.setattr(
+        qc, "_materialize", lambda df, fp: calls.append(fp) or df
+    )
+    cut = _cut(spark)
+    # miss, hot read, refresh
+    for now in (cut, cut, cut + DAY_NS):
+        qc.config.override_now_ns = now
+        got = qc.sql(sql).collect()
+        d = qc.last_decision
+        assert d.cached and not d.served_from_memo and d.memo_key is None, d
+        want = spark.sql(_asof(sql, "events", now)).collect()
+        assert _rows(got) == _rows(want)
+    assert calls == []
+
+
+def test_materialize_propagates_execution_errors(spark, qc):
+    """An error running a bounded result surfaces from sql(), as it would
+    from collect(), instead of being swallowed and the query re-run at
+    read time; a schema Arrow cannot carry stays lazy."""
+    bad = spark.range(3).select(
+        F.when(F.col("id") > 1, F.raise_error(F.lit("qc-boom")))
+        .otherwise(F.col("id"))
+        .alias("x")
+    )
+    with pytest.raises(Exception, match="qc-boom"):
+        qc._materialize(bad, "fp")
+    iv = spark.range(1).select(F.expr("make_interval(1, 2)").alias("iv"))
+    assert qc._materialize(iv, "fp") is iv
+
+
+def test_mixed_null_placement_result_is_driver_local(spark, qc):
+    """``ORDER BY n DESC, k`` mixes null placements (DESC puts nulls last,
+    ASC first), which one Arrow sort cannot express: Spark sorts the rows
+    once inside sql(), so reading the result, and every memoized hot read
+    of it, runs no Spark job."""
+    sql = (
+        "SELECT event_type AS k, count(*) AS n FROM events GROUP BY 1 "
+        "ORDER BY n DESC, k"
+    )
+    cut = _cut(spark)
+    qc.config.override_now_ns = cut
+    df = qc.sql(sql)
+    got, jobs = group_job_stats(
+        spark, f"memo-read-{uuid.uuid4().hex}", df.collect
+    )
+    assert jobs == [], f"reading the result ran Spark jobs {jobs}"
+    want = spark.sql(_asof(sql, "events", cut)).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert _hot_reads(spark, qc, sql) == got
